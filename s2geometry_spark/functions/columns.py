@@ -114,14 +114,9 @@ def child_position(cell: Column | str, lvl: int) -> Column:
     return F.shiftrightunsigned(raw, shift).bitwiseAND(F.lit(3)).cast("int")
 
 
-def ancestors_array(cell: Column | str, min_level: int, max_level: int, level_mod: int = 1) -> Column:
-    """Array of parents of `cell` at levels [min_level..max_level] ∩ aligned
-    levels — the ANCESTOR term set of the S2RegionTermIndexer join algebra
-    (s2region_term_indexer.cc:121-269).  Pure Column expression: the explode
-    of this array is the point side of the containment equi join."""
-    levels = [
-        l
-        for l in range(min_level, max_level + 1)
-        if (l - min_level) % level_mod == 0
-    ]
+def ancestors_array(cell: Column | str, levels) -> Column:
+    """Array of parents of `cell` at each of `levels` — the ANCESTOR term
+    set of the S2RegionTermIndexer join algebra
+    (s2region_term_indexer.cc:121-269).  Pure Column expression: the
+    explode of this array is the point side of the containment equi join."""
     return F.array(*[parent(cell, l) for l in levels])

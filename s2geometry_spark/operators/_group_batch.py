@@ -6,12 +6,11 @@ invocation overhead (~2-4 ms of pandas/Arrow machinery) dwarfs the
 kernel work — measured on 100k 20-vertex polylines: 19-22 s per-group
 vs 6.7-7.4 s batched (448 executor-CPU-seconds, mostly machinery).
 
-The fix is the idiom encode_vectors / encode_shape_indexes already use
-(operators/encode_ops.py): hash-repartition by the group key, sort
-within partitions so groups are contiguous runs, and mapInPandas a
-runner that slices MANY groups per Python call, carrying the tail group
-across Arrow batch boundaries so per-task memory stays
-O(batch + largest group).  This module is that idiom, shared.
+The fix: hash-repartition by the group key, sort within partitions so
+groups are contiguous runs, and mapInPandas a runner that slices MANY
+groups per Python call, carrying the tail group across Arrow batch
+boundaries so per-task memory stays O(batch + largest group).  Null keys
+form one group, like groupBy's.
 
 The emit callback receives a pandas DataFrame holding one or more
 COMPLETE groups (contiguous by key) and returns the output frame for
@@ -47,8 +46,10 @@ def sorted_run_map(
                 carry = None
             if not len(pdf):
                 continue
-            last = pdf[key_col].iloc[-1]
-            mask = pdf[key_col] == last
+            keys = pdf[key_col]
+            last = keys.iloc[-1]
+            # `== None/NaN` is all-False: match a null tail with isna()
+            mask = keys.isna() if pd.isna(last) else keys == last
             carry = pdf[mask]
             head = pdf[~mask]
             if len(head):
@@ -72,6 +73,7 @@ def group_bounds(keys) -> list[tuple[int, int]]:
     n = len(keys)
     if n == 0:
         return []
-    change = np.flatnonzero(keys[1:] != keys[:-1]) + 1
+    null = pd.isna(keys)
+    change = np.flatnonzero((keys[1:] != keys[:-1]) & ~(null[1:] & null[:-1])) + 1
     bounds = np.concatenate([[0], change, [n]])
     return [(int(bounds[i]), int(bounds[i + 1])) for i in range(len(bounds) - 1)]

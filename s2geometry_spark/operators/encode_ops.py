@@ -116,44 +116,23 @@ def encode_vectors(vectors: DataFrame) -> DataFrame:
     vector's elements: the plan for snapshotting millions of per-key
     coverings / point sets to the reference's lazy-decode wire format.
     """
+    from ._group_batch import group_bounds, sorted_run_map
 
     def emit(pdf: pd.DataFrame) -> pd.DataFrame:
+        vid = pdf["vec_id"].to_numpy()
         ids, hexes, nbytes = [], [], []
-        vid_arr = pdf["vec_id"].to_numpy()
-        change = np.flatnonzero(vid_arr[1:] != vid_arr[:-1]) + 1
-        bounds = np.concatenate([[0], change, [len(pdf)]])
-        for gi in range(len(bounds) - 1):
-            g = pdf.iloc[bounds[gi]:bounds[gi + 1]]
-            raw = _encode_vector_one(g)
-            ids.append(vid_arr[bounds[gi]])
+        for lo, hi in group_bounds(vid):
+            raw = _encode_vector_one(pdf.iloc[lo:hi])
+            ids.append(vid[lo])
             hexes.append(raw.hex().upper())
             nbytes.append(len(raw))
         return pd.DataFrame({"vec_id": ids, "encoding_hex": hexes,
                              "n_bytes": nbytes})
 
-    def run(batches):
-        # sorted-run batching with a carry tail (see encode_shape_indexes)
-        carry = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if not len(pdf):
-                continue
-            last = pdf["vec_id"].iloc[-1]
-            mask = pdf["vec_id"] == last
-            carry = pdf[mask]
-            head = pdf[~mask]
-            if len(head):
-                yield emit(head)
-        if carry is not None and len(carry):
-            yield emit(carry)
-
-    return (
-        vectors.repartition("vec_id")
-        .sortWithinPartitions("vec_id", "idx")
-        .mapInPandas(
-            run, "vec_id string, encoding_hex string, n_bytes int")
+    return sorted_run_map(
+        vectors, "vec_id", emit,
+        "vec_id string, encoding_hex string, n_bytes int",
+        sort_cols=("idx",),
     )
 
 
@@ -200,6 +179,7 @@ def encode_shape_indexes(shapes: DataFrame) -> DataFrame:
     Input: (index_id, shape_id, kind, chain_id, vertex_idx, x, y, z);
     output: (index_id, n_cells, encoding_hex, n_bytes).
     """
+    from ._group_batch import group_bounds, sorted_run_map
 
     def emit(pdf: pd.DataFrame) -> pd.DataFrame:
         from ..kernel.encodings import Encoder
@@ -215,28 +195,17 @@ def encode_shape_indexes(shapes: DataFrame) -> DataFrame:
         kind = pdf["kind"].to_numpy()
         cid = pdf["chain_id"].to_numpy()
         xyz = pdf[["x", "y", "z"]].to_numpy(np.float64)
-        n = len(pdf)
-        # run starts where (index_id, shape_id) changes
-        grp_change = np.flatnonzero(iid[1:] != iid[:-1]) + 1
-        grp_bounds = np.concatenate([[0], grp_change, [n]])
         ids, cells, hexes, nbytes = [], [], [], []
-        for gi in range(len(grp_bounds) - 1):
-            lo, hi = grp_bounds[gi], grp_bounds[gi + 1]
+        for lo, hi in group_bounds(iid):
             index = MutableIndex()
-            s_change = np.flatnonzero(sid[lo + 1:hi] != sid[lo:hi - 1]) \
-                + lo + 1
-            s_bounds = np.concatenate([[lo], s_change, [hi]])
-            for si in range(len(s_bounds) - 1):
-                slo, shi = s_bounds[si], s_bounds[si + 1]
+            for slo, shi in group_bounds(sid[lo:hi]):
+                slo, shi = lo + slo, lo + shi
                 k = kind[slo]
                 if k == "released":
                     index.add(None)
                     continue
-                c_change = np.flatnonzero(
-                    cid[slo + 1:shi] != cid[slo:shi - 1]) + slo + 1
-                c_bounds = np.concatenate([[slo], c_change, [shi]])
-                chains = [xyz[c_bounds[ci]:c_bounds[ci + 1]]
-                          for ci in range(len(c_bounds) - 1)]
+                chains = [xyz[slo + clo:slo + chi]
+                          for clo, chi in group_bounds(cid[slo:shi])]
                 if k == "polyline":
                     index.add(LaxPolyline(chains[0]))
                 elif k == "polygon":
@@ -254,35 +223,8 @@ def encode_shape_indexes(shapes: DataFrame) -> DataFrame:
         return pd.DataFrame({"index_id": ids, "n_cells": cells,
                              "encoding_hex": hexes, "n_bytes": nbytes})
 
-    def run(batches):
-        # groups are contiguous (sortWithinPartitions) but may straddle
-        # Arrow batch boundaries: carry the tail group into the next
-        # batch so per-task memory stays O(batch + largest group), while
-        # one Python call handles THOUSANDS of groups (the per-group
-        # applyInPandas overhead dominated at small group sizes)
-        carry = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if not len(pdf):
-                continue
-            last = pdf["index_id"].iloc[-1]
-            mask = pdf["index_id"] == last
-            carry = pdf[mask]
-            head = pdf[~mask]
-            if len(head):
-                yield emit(head)
-        if carry is not None and len(carry):
-            yield emit(carry)
-
-    return (
-        shapes.repartition("index_id")
-        .sortWithinPartitions("index_id", "shape_id", "chain_id",
-                              "vertex_idx")
-        .mapInPandas(
-            run,
-            "index_id string, n_cells int, encoding_hex string,"
-            " n_bytes int",
-        )
+    return sorted_run_map(
+        shapes, "index_id", emit,
+        "index_id string, n_cells int, encoding_hex string, n_bytes int",
+        sort_cols=("shape_id", "chain_id", "vertex_idx"),
     )

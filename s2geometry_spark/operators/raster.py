@@ -61,20 +61,14 @@ def rasterize_polygon(
 ) -> DataFrame:
     """(face, i, j) cells whose centers lie inside the polygon."""
     grid = grid_centers(cell_grid(spark, level, partitions), level)
-    geom = [(l.vertices, l.origin_inside, l.is_empty_or_full) for l in polygon.loops]
 
     @F.pandas_udf("boolean")
     def inside(cx: pd.Series, cy: pd.Series, cz: pd.Series) -> pd.Series:
-        from ..kernel.contains import contains_points
-
         pts = np.stack(
             [cx.to_numpy(np.float64), cy.to_numpy(np.float64), cz.to_numpy(np.float64)],
             -1,
         )
-        out = np.zeros(len(pts), dtype=bool)
-        for vertices, origin_inside, empty_or_full in geom:
-            out ^= contains_points(vertices, origin_inside, pts, empty_or_full)
-        return pd.Series(out)
+        return pd.Series(polygon.contains(pts))
 
     return grid.filter(inside("cx", "cy", "cz")).select("face", "i", "j")
 

@@ -801,8 +801,7 @@ def indexed_closest_edges_join(
         probe = probe_cells_df(index, max_distance_rad)
         probe_side = F.broadcast(probe) if n_probe_bound <= 2_000_000 else probe
         terms = points.withColumn(
-            "_term",
-            F.explode(F.array(*[CC.parent("cell_id_s", l) for l in levels])),
+            "_term", F.explode(CC.ancestors_array("cell_id_s", levels))
         )
         cand = terms.join(
             probe_side, terms["_term"] == probe["probe_cell_s"], "inner"

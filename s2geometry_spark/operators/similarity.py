@@ -14,6 +14,7 @@
 from __future__ import annotations
 
 import hashlib
+import math
 
 import numpy as np
 import pandas as pd
@@ -53,8 +54,15 @@ def _norm(a):
 
 def _sql_double(v: float) -> str:
     """A SQL literal reproducing the exact double `v` (repr round-trips;
-    decimal/scientific parse + CAST AS DOUBLE are correctly rounded)."""
-    return f"CAST({float(v)!r} AS DOUBLE)"
+    decimal/scientific parse + CAST AS DOUBLE are correctly rounded).
+    Non-finite values have no numeric literal: they go through the
+    string cast Spark accepts (`double('NaN')`, `double('-Infinity')`)."""
+    v = float(v)
+    if math.isnan(v):
+        return "double('NaN')"
+    if math.isinf(v):
+        return "double('Infinity')" if v > 0 else "double('-Infinity')"
+    return f"CAST({v!r} AS DOUBLE)"
 
 
 def _dot_codegen(qc: str, cc: str, dim: int):

@@ -3,10 +3,13 @@
 Strategy (SURVEY.md §2.4, after S2RegionTermIndexer s2region_term_indexer.cc:27-72
 and S2ContainsPointQuery s2contains_point_query.h:75-90):
 
- 1. Driver side: cover each query polygon with the exact S2RegionCoverer
-    port (min_level..max_level), plus its *interior* covering; rows
-    ``(polygon_id, cell_id_s, is_interior)``.  Interior cells skip the
-    exact PIP test (s2region_coverer.cc:314-318 semantics).
+ 1. Driver side: cover each query polygon ONCE with the exact
+    S2RegionCoverer port (levels DEFAULT_MIN_LEVEL..DEFAULT_MAX_LEVEL,
+    at most DEFAULT_MAX_CELLS cells); rows ``(polygon_id, cell_id_s,
+    is_interior)`` with ``is_interior = region.contains_cell(cell)``.
+    Interior cells skip the exact PIP test.  Every cell of the interior
+    covering that is also in this covering is contained, so a second
+    (interior) coverer run would flag nothing more.
  2. Data plane: each point explodes to its ancestors at the covering
     levels — a pure-JVM Column expression — and equi-joins the
     (broadcast) covering table on the cell id.  Coverings of one polygon
@@ -22,8 +25,6 @@ the fact that the broadcast join needs no repartition of the fact table.
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -32,8 +33,8 @@ from pyspark.sql.types import BooleanType
 
 from ..functions import columns as CC
 from ..kernel import cellid as K
-from ..kernel.cid import CID
-from ..kernel.contains import Polygon, contains_points, parse_polygon
+from ..kernel.cell import Cell
+from ..kernel.contains import Polygon
 from ..kernel.coverer import RegionCoverer
 from ..kernel.region import ShapeRegion
 
@@ -44,36 +45,20 @@ DEFAULT_MAX_CELLS = 32
 
 def cover_polygons(
     polygons: list[tuple[str, Polygon]],
-    min_level: int = DEFAULT_MIN_LEVEL,
-    max_level: int = DEFAULT_MAX_LEVEL,
-    max_cells: int = DEFAULT_MAX_CELLS,
 ) -> list[tuple[str, int, bool]]:
     """(polygon_id, biased cell_id, is_interior) covering rows, driver-side."""
     rows: list[tuple[str, int, bool]] = []
     for pid, poly in polygons:
         region = ShapeRegion(polygon=poly)
         cov = RegionCoverer(
-            max_cells=max_cells, min_level=min_level, max_level=max_level
+            max_cells=DEFAULT_MAX_CELLS,
+            min_level=DEFAULT_MIN_LEVEL,
+            max_level=DEFAULT_MAX_LEVEL,
         )
-        exterior = cov.get_covering(region)
-        interior_set = set()
-        cov2 = RegionCoverer(
-            max_cells=max_cells, min_level=min_level, max_level=max_level
-        )
-        for cid in cov2.get_interior_covering(region):
-            interior_set.add(cid.id)
-        # mark exterior covering cells fully inside the region as interior
-        from ..kernel.cell import Cell
-
-        for cid in exterior:
-            is_int = cid.id in interior_set or region.contains_cell(Cell(cid))
-            rows.append((pid, _bias_int(cid.id), bool(is_int)))
+        for cid in cov.get_covering(region):
+            is_int = bool(region.contains_cell(Cell(cid)))
+            rows.append((pid, int(K.bias(cid.id)), is_int))
     return rows
-
-
-def _bias_int(raw: int) -> int:
-    """uint64 cell id → order-preserving signed storage form (§1.2)."""
-    return raw - (1 << 63)
 
 
 def _covering_rows_df(spark: SparkSession, rows) -> DataFrame:
@@ -90,26 +75,20 @@ def _covering_rows_df(spark: SparkSession, rows) -> DataFrame:
 
 
 def coverings_df(
-    spark: SparkSession,
-    polygons: list[tuple[str, Polygon]],
-    **opts,
+    spark: SparkSession, polygons: list[tuple[str, Polygon]]
 ) -> DataFrame:
-    rows = cover_polygons(polygons, **opts)
-    return _covering_rows_df(spark, rows)
+    return _covering_rows_df(spark, cover_polygons(polygons))
 
 
 def make_pip_udf(polygons: list[tuple[str, Polygon]]):
     """Vectorized PIP filter: (polygon_id, lat, lng) → contained.
 
-    The polygon vertex arrays are captured in the closure → shipped once
-    per executor with the serialized UDF (the broadcast-small-side of the
-    join).  Each Arrow batch groups rows by polygon and runs the
-    einsum crossing-parity kernel per group.
+    The polygons are captured in the closure → shipped once per executor
+    with the serialized UDF (the broadcast-small-side of the join).  Each
+    Arrow batch groups rows by polygon and runs Polygon.contains (the
+    einsum crossing-parity kernel) per group.
     """
-    geom = {
-        pid: [(l.vertices, l.origin_inside, l.is_empty_or_full) for l in poly.loops]
-        for pid, poly in polygons
-    }
+    geom = dict(polygons)
 
     @F.pandas_udf(BooleanType())
     def pip(polygon_id: pd.Series, lat: pd.Series, lng: pd.Series) -> pd.Series:
@@ -122,14 +101,9 @@ def make_pip_udf(polygons: list[tuple[str, Polygon]]):
         pts = np.stack([x, y, z], axis=-1)
         pids = polygon_id.to_numpy()
         for pid in pd.unique(polygon_id):
-            mask = pids == pid
-            sub = pts[mask]
-            inside = np.zeros(len(sub), dtype=bool)
-            for vertices, origin_inside, empty_or_full in geom.get(pid, []):
-                inside ^= contains_points(
-                    vertices, origin_inside, sub, empty_or_full
-                )
-            out[mask] = inside
+            if pid in geom:
+                mask = pids == pid
+                out[mask] = geom[pid].contains(pts[mask])
         return pd.Series(out)
 
     return pip
@@ -138,29 +112,25 @@ def make_pip_udf(polygons: list[tuple[str, Polygon]]):
 def point_in_polygon_join(
     points: DataFrame,
     polygons: list[tuple[str, Polygon]],
-    min_level: int = DEFAULT_MIN_LEVEL,
-    max_level: int = DEFAULT_MAX_LEVEL,
-    max_cells: int = DEFAULT_MAX_CELLS,
     covering_rows: list[tuple[str, int, bool]] | None = None,
 ) -> DataFrame:
     """points(…, lat, lng, cell_id_s at leaf) ⋈ polygons → rows that fall
     inside; output = points columns + polygon_id + is_interior_cell.
 
-    The point side explodes its ancestors only at the levels that actually
-    occur in the coverings (collected driver-side — the term-indexer's
-    level_mod trick, s2region_term_indexer.h:145-160, taken to its
-    data-dependent limit), so the fact-table blow-up is #distinct-levels,
-    not (max_level - min_level).
+    `covering_rows` are cover_polygons(polygons), when the caller has
+    already computed them.  The point side explodes its ancestors only at
+    the levels that actually occur in the coverings (collected
+    driver-side — the term-indexer's level_mod trick,
+    s2region_term_indexer.h:145-160, taken to its data-dependent limit),
+    so the fact-table blow-up is #distinct-levels, not
+    (max_level - min_level).
     """
     spark = points.sparkSession
     if covering_rows is None:
-        covering_rows = cover_polygons(
-            polygons, min_level=min_level, max_level=max_level, max_cells=max_cells
-        )
+        covering_rows = cover_polygons(polygons)
     cov = _covering_rows_df(spark, covering_rows)
-    levels = sorted(
-        {CID(c + (1 << 63)).level() for _, c, _ in covering_rows}
-    ) or [min_level]
+    raw = K.unbias(np.array([c for _, c, _ in covering_rows], dtype=np.int64))
+    levels = np.unique(K.level(raw)).tolist() or [DEFAULT_MIN_LEVEL]
     # Coarse pre-filter BEFORE the ancestor explode: every covering cell
     # sits at level ≥ min(levels), so a point can only match if its
     # ancestor at that coarsest level is an ancestor of some covering
@@ -169,13 +139,12 @@ def point_in_polygon_join(
     # explode — a pure superset reduction, result-identical.
     if covering_rows:
         l0 = levels[0]
-        raw = np.array([c for _, c, _ in covering_rows], dtype=np.int64)
-        anc = np.unique(K.bias(K.parent(K.unbias(raw), l0)))
+        anc = np.unique(K.bias(K.parent(raw, l0)))
         points = points.filter(
             CC.parent("cell_id_s", l0).isin([int(v) for v in anc])
         )
     terms = points.withColumn(
-        "_term", F.explode(F.array(*[CC.parent("cell_id_s", l) for l in levels]))
+        "_term", F.explode(CC.ancestors_array("cell_id_s", levels))
     )
     cand = terms.join(
         F.broadcast(cov), terms["_term"] == cov["cell_id_s"], "inner"

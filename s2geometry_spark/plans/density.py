@@ -17,10 +17,12 @@ never shuffles.)
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import columns as CC
+from ..kernel import cellid as K
 from ..kernel.cid import CID
 
 
@@ -103,14 +105,10 @@ def salted_candidate_join(
     else:
         salt_df = spark.createDataFrame([], "cell_id_s long, n_salt int")
 
-    levels = sorted(
-        {
-            CID(r.cell_id_s + (1 << 63)).level()
-            for r in coverings.select("cell_id_s").distinct().collect()
-        }
-    )
+    cells = [r.cell_id_s for r in coverings.select("cell_id_s").distinct().collect()]
+    levels = np.unique(K.level(K.unbias(np.array(cells, dtype=np.int64)))).tolist()
     terms = points.withColumn(
-        "_term", F.explode(F.array(*[CC.parent("cell_id_s", l) for l in levels]))
+        "_term", F.explode(CC.ancestors_array("cell_id_s", levels))
     )
     # point side: salt from the row key, 0 for cold cells
     terms = terms.join(

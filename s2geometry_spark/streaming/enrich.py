@@ -28,13 +28,12 @@ from .ingest import index_stream, parse_pages_stream
 def enrich_mentions_stream(
     pages_stream: DataFrame,
     polygons: list[tuple[str, Polygon]],
-    **cover_opts,
 ) -> DataFrame:
     """pages stream → geotagged mentions → leaf cells → stream-static
     PIP join.  Output rows are the batch flagship's: mention columns +
     polygon_id + is_interior_cell."""
     mentions = index_stream(parse_pages_stream(pages_stream), level=30)
-    return point_in_polygon_join(mentions, polygons, **cover_opts)
+    return point_in_polygon_join(mentions, polygons)
 
 
 def polygon_mention_counts_stream(

@@ -71,3 +71,33 @@ def test_gate_reads_scan_size(emb):
 
     # the sf0.01 fixture scan is far below the 32 MB gate
     assert _want_codegen(emb) is False
+
+
+@pytest.mark.parametrize("bad", [float("inf"), float("-inf"), float("nan")])
+def test_codegen_literals_accept_non_finite_values(spark, bad):
+    """A non-finite value in a sampled centroid / codeword becomes a SQL
+    literal in the codegen plans; it must parse and match the
+    interpreted plan (NaN scores compared by repr)."""
+    import numpy as np
+
+    rng = np.random.RandomState(5)
+    rows = []
+    for vid in range(16):
+        v = rng.uniform(-1, 1, 8).tolist()
+        if vid == 15:
+            v[0] = bad
+        rows.append((vid, v))
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+    def rows_of(df):
+        return sorted(
+            (r.query_id, r.cand_id, repr(r.cosine), r.rank) for r in df.collect()
+        )
+
+    for op, kw in (
+        (ann_ivf_topk, dict(n_centroids=16, nprobe=2)),
+        (ann_pq_topk, dict(n_codewords=16, m_subspaces=2)),
+    ):
+        fast = rows_of(op(emb, n_queries=4, k=3, codegen=True, **kw))
+        slow = rows_of(op(emb, n_queries=4, k=3, codegen=False, **kw))
+        assert fast == slow and len(fast) > 0

@@ -64,7 +64,7 @@ def test_candidates_unique_per_point_polygon(spark, points):
 
 
 def test_coverings_disjoint_and_leveled():
-    rows = cover_polygons(POLYGONS, min_level=4, max_level=16, max_cells=32)
+    rows = cover_polygons(POLYGONS)
     from s2geometry_spark.kernel.cid import CID
 
     by_pid = {}
@@ -76,6 +76,57 @@ def test_coverings_disjoint_and_leveled():
             assert a.range_max().id < b.range_min().id, pid
         for c in cells:
             assert 4 <= c.level() <= 16
+
+
+def _fractal_polygons(seeds):
+    """Seeded 192-edge kernel.fractal loops of 1° radius."""
+    import math
+
+    from s2geometry_spark.kernel.contains import Polygon
+    from s2geometry_spark.kernel.coords import latlng_to_xyz
+    from s2geometry_spark.kernel.fractal import Fractal, frame_at
+
+    out = []
+    for seed in seeds:
+        rs = np.random.RandomState(seed)
+        fractal = Fractal(rs)
+        fractal.set_level_for_approx_max_edges(192)
+        fractal.set_level_for_approx_min_edges(192)
+        fractal.set_fractal_dimension(1.3)
+        center = np.array(
+            latlng_to_xyz(rs.uniform(-60, 60), rs.uniform(-180, 180)),
+            dtype=np.float64,
+        )
+        loop = fractal.make_loop(frame_at(rs, center), math.radians(1.0))
+        out.append((f"fractal_{seed}", Polygon([loop])))
+    return out
+
+
+def test_interior_covering_cells_are_flagged_interior():
+    """Every cell both in the interior covering and in cover_polygons'
+    covering is flagged is_interior by contains_cell alone — the fact
+    that makes a second (interior) coverer run per polygon redundant."""
+    import __spark_entry__ as E
+    from s2geometry_spark.kernel import cellid as K
+    from s2geometry_spark.kernel.coverer import RegionCoverer
+    from s2geometry_spark.kernel.region import ShapeRegion
+    from s2geometry_spark.operators import spatial_join as SJ
+
+    polygons = E._continental_polygons() + _fractal_polygons([11, 12, 13])
+    flagged = {(pid, c): is_int for pid, c, is_int in cover_polygons(polygons)}
+    shared = 0
+    for pid, poly in polygons:
+        cov = RegionCoverer(
+            max_cells=SJ.DEFAULT_MAX_CELLS,
+            min_level=SJ.DEFAULT_MIN_LEVEL,
+            max_level=SJ.DEFAULT_MAX_LEVEL,
+        )
+        for cid in cov.get_interior_covering(ShapeRegion(polygon=poly)):
+            key = (pid, int(K.bias(cid.id)))
+            if key in flagged:
+                shared += 1
+                assert flagged[key], key
+    assert shared > 0, "the property must be exercised"
 
 
 def test_interior_cells_skip_pip_correctly(spark, points):
